@@ -1177,17 +1177,15 @@ def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from umi_dedup_spark.operators.setsim import jaccard_similarity_join
+    from umi_dedup_spark.session import spread_to_slots
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # scan-parallelism floor on the RAW rows (r6): the tokenization
     # projection below is the per-row cost of every consumer inside the
     # join operator; on a one-row-group parquet input it would run on a
     # single core. Spreading the raw text rows first puts the tokenize
-    # above the exchange; a no-op when the scan already yields >= slots
-    # partitions (every at-scale input).
-    slots = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < slots:
-        docs = docs.repartition(slots)
+    # above the exchange.
+    docs = spread_to_slots(docs)
     tset = docs.select(
         "doc_id",
         "source",

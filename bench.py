@@ -3,7 +3,7 @@
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]:
+local[$SPARK_GRAFT_CPUS] (default: one slot per host CPU):
   * flagship_dedup  — full near-dup clustering pipeline on `documents`
   * exact_dedup     — exact-hash family pass + survivor window (SQL)
   * minhash_sketch  — relational MinHash kernel (SQL)
@@ -17,9 +17,9 @@ local[$SPARK_GRAFT_CPUS]:
   * synth_dedup_50k — pipeline over a 50k-doc JVM-synthesized corpus
                       (the throughput number quoted as docs/sec)
 
-Scaling evidence (north rule, N vs 4N): run `python BENCH/run_scaling.py`,
-which executes the synth_dedup workload in fresh subprocesses at
-SPARK_GRAFT_CPUS=8 and =32 and writes BENCH/BASELINE.md.
+Scaling evidence: `python BENCH/run_scaling.py` executes the synth_dedup
+workload in fresh subprocesses at two SPARK_GRAFT_CPUS levels and writes
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -30,18 +30,18 @@ import sys
 import time
 
 
-def run_bench(sf_dir: str, cpus: str, synth_docs: int = 50_000, only: str | None = None):
+def run_bench(sf_dir: str, synth_docs: int = 50_000, only: str | None = None):
     import __spark_entry__ as entry_mod
     from umi_dedup_spark.config import DedupConfig
     from umi_dedup_spark.plans.pipeline import DedupPipeline
     from umi_dedup_spark.session import get_spark, warm_python_workers
     from umi_dedup_spark.synth import spark_synth_pages
 
-    # 1x task slots per shuffle: measured 4x partitions REGRESSED the
-    # pairs stage ~13x (37s vs 3s at 5k docs, healthy window) — its
-    # window+self-join+agg chain pays per-partition sort/setup on every
-    # exchange, and AQE does not coalesce window inputs
-    spark = get_spark("bench", shuffle_partitions=max(int(cpus) if cpus.isdigit() else 32, 8))
+    # get_spark's default of one shuffle partition per task slot: measured
+    # 4x partitions REGRESSED the pairs stage ~13x (37s vs 3s at 5k docs,
+    # healthy window) — its window+self-join+agg chain pays per-partition
+    # sort/setup on every exchange, and AQE does not coalesce window inputs
+    spark = get_spark("bench")
     warm_python_workers(spark)
     queries: dict[str, float] = {}
     extra: dict[str, float] = {}
@@ -149,24 +149,15 @@ def run_bench(sf_dir: str, cpus: str, synth_docs: int = 50_000, only: str | None
         "queries": queries,
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1] if "sf" in sf_dir else sf_dir,
         **extra,
-        "cpus": cpus,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
 
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # default sized so the harness completes even when the shared VM's
     # memory throughput is in a degraded window (see BENCH/BASELINE.md
     # caveats); raise via env for scaling runs
     synth_docs = int(os.environ.get("BENCH_SYNTH_DOCS", "20000"))
-    # size the pre-touched heap to the input, like executor memory on a
-    # real cluster: at >= 500k synth docs the pipeline's working set
-    # outgrows the default 8g Xms and every cold run re-pays this host's
-    # first-touch pathology MID-STAGE (measured at 1M@32: pairs stage
-    # 130s -> 22s, whole pipeline 270s -> 135s with Xms=24g). session.py
-    # still gates the pre-touch on actual available memory.
-    if "SPARK_DRIVER_XMS" not in os.environ and synth_docs >= 500_000:
-        os.environ["SPARK_DRIVER_XMS"] = "24g"
     only = sys.argv[1] if len(sys.argv) > 1 else None
-    print(json.dumps(run_bench(sf_dir, cpus, synth_docs, only)))
+    print(json.dumps(run_bench(sf_dir, synth_docs, only)))

@@ -116,3 +116,22 @@ def test_order_priority_counts_semi_join_shape(spark):
     plan = _plan(df)
     assert "LeftSemi" in plan, plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_plan_leaf_truncates_lineage(spark):
+    # a persisted stage is handed on as a LogicalRDD leaf over its
+    # executed RDD: the consumer's logical plan carries no upstream
+    # lineage, and the rows are the input's
+    from umi_dedup_spark.plans.pipeline import _plan_leaf
+
+    src = spark.range(0, 50).withColumn("sq", F.col("id") * F.col("id")).filter("id % 3 = 0")
+    src = src.persist()
+    try:
+        out = _plan_leaf(src)
+        logical = out._jdf.queryExecution().logical()
+        assert logical.nodeName() == "LogicalRDD", logical.toString()
+        assert logical.children().isEmpty(), logical.toString()
+        assert sorted(out.collect()) == sorted(src.collect())
+        assert out.schema == src.schema
+    finally:
+        src.unpersist()

@@ -308,17 +308,6 @@ def make_fingerprint_udf(
     return fingerprint_udf
 
 
-def make_minhash_udf(k: int, num_perm: int, seed: int):
-    """pandas_udf: text -> array<long> MinHash signature."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        sigs, _, _ = _fingerprint_batch(texts, k, num_perm, seed)
-        return pd.Series(sigs)
-
-    return minhash_udf
-
-
 def make_window_hash_udf(anchor_stride: int, window_tokens: int):
     """pandas_udf: text -> array<long> winnowing-anchored window hashes
     (the standalone substring-pass kernel; the pipeline gets the same
@@ -335,20 +324,6 @@ def make_window_hash_udf(anchor_stride: int, window_tokens: int):
         return pd.Series(out)
 
     return window_hash_udf
-
-
-def make_simhash_udf(k: int):
-    """pandas_udf: text -> long 64-bit SimHash fingerprint."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        cache = shared_token_cache()
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            out[i] = simhash64(shingle_hashes(t if isinstance(t, str) else "", k, cache))
-        return pd.Series(out)
-
-    return simhash_udf
 
 
 def hamming64(col_a, col_b):

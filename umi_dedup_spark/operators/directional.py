@@ -23,54 +23,6 @@ from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.hashing import hamming64, minhash_jaccard
 
 
-def attach_pair_attrs(pairs: DataFrame, fams: DataFrame) -> DataFrame:
-    """Join family attributes (simhash, count, tie-break) onto both pair
-    sides. fams is the (much smaller) family table — broadcast when small;
-    left to Catalyst/AQE otherwise.
-    """
-    attrs = fams.select(
-        F.col("norm_hash").alias("fam"),
-        F.col("simhash"),
-        F.col("minhash"),
-        F.col("fam_count"),
-        F.col("fam_tb"),
-    )
-    a = attrs.select(
-        F.col("fam").alias("src"),
-        F.col("simhash").alias("simhash_a"),
-        F.col("minhash").alias("minhash_a"),
-        F.col("fam_count").alias("count_a"),
-        F.col("fam_tb").alias("tb_a"),
-    )
-    b = attrs.select(
-        F.col("fam").alias("dst"),
-        F.col("simhash").alias("simhash_b"),
-        F.col("minhash").alias("minhash_b"),
-        F.col("fam_count").alias("count_b"),
-        F.col("fam_tb").alias("tb_b"),
-    )
-    return pairs.join(a, "src").join(b, "dst")
-
-
-def directed_edges(pairs_with_attrs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Filter near-duplicate pairs and emit directed edges.
-
-    Input: canonical pairs with attrs and an ``is_substring`` flag column.
-    Output: (src, dst) directed — src passes the count predicate toward dst.
-    A pair yields 0, 1 or 2 directed edges; 0 means the two families stay
-    separate (exactly as in the reference, where no adjacency entry forms).
-    """
-    near = pairs_with_attrs.filter(
-        F.col("is_substring")
-        | (hamming64(F.col("simhash_a"), F.col("simhash_b")) <= cfg.hamming_threshold)
-        | (
-            minhash_jaccard(F.col("minhash_a"), F.col("minhash_b"))
-            >= cfg.jaccard_threshold
-        )
-    )
-    return _directional(near)
-
-
 def _directional(near: DataFrame) -> DataFrame:
     fwd = near.filter(F.col("count_a") >= 2 * F.col("count_b") - 1).select(
         F.col("src"), F.col("dst")
@@ -82,23 +34,29 @@ def _directional(near: DataFrame) -> DataFrame:
 
 
 def build_edges(pairs: DataFrame, fams: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Candidate pairs -> directed edges, with a TWO-PHASE attribute join
-    that keeps the wide MinHash signatures (num_perm longs ~ 512B/family)
-    out of the main shuffle:
+    """Candidate pairs -> directed edges (src, dst).
 
-    phase 1 joins only the narrow attrs (simhash 8B, count, tie-break) and
-    decides the cheap gate (substring proof OR SimHash Hamming ball);
-    phase 2 joins minhash ONLY for the residual pairs that failed the
-    cheap gate — at web scale most true near-dups pass phase 1, so the
-    signature bytes shuffled scale with the residual, not with every
-    candidate pair. Predicate semantics identical to
-    ``directed_edges(attach_pair_attrs(...))``.
+    A canonical pair (a, b) is near-duplicate iff ``is_substring``, or
+    hamming(simhash_a, simhash_b) <= ``cfg.hamming_threshold``, or the
+    estimated MinHash Jaccard >= ``cfg.jaccard_threshold``. A
+    near-duplicate pair emits a -> b iff count_a >= 2*count_b - 1 and
+    b -> a iff count_b >= 2*count_a - 1: 0, 1 or 2 directed edges; 0
+    means the two families stay separate (exactly as in the reference,
+    where no adjacency entry forms).
+
+    The attribute join runs in TWO phases to keep the wide MinHash
+    signatures (num_perm longs ~ 512B/family) out of the main shuffle:
+    phase 1 joins only the narrow attrs (simhash 8B, count) and decides
+    the cheap gate (substring proof OR SimHash Hamming ball); phase 2
+    joins minhash ONLY for the residual pairs that failed the cheap gate
+    — at web scale most true near-dups pass phase 1, so the signature
+    bytes shuffled scale with the residual, not with every candidate
+    pair.
     """
     light = fams.select(
         F.col("norm_hash").alias("fam"),
         F.col("simhash"),
         F.col("fam_count"),
-        F.col("fam_tb"),
     )
     a = light.select(
         F.col("fam").alias("src"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from umi_dedup_spark.config import DedupConfig
 from umi_dedup_spark.functions.text import normalize_text, quality_score, usable_filter
+from umi_dedup_spark.session import spread_to_slots
 
 
 def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -39,25 +40,12 @@ def prepare_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     usable = usable.select(*keep)
     # Scan-parallelism floor (r6, guide §2.5 input skew): a small input
     # written as ONE parquet row group is unsplittable — file-split
-    # configs cannot help, every "split" past the row-group start reads
-    # nothing, and the whole normalize/hash/quality chain (all the
-    # per-row regex work of this stage AND the families re-scan) runs on
-    # one core while the rest idle (measured at 50k docs: 3.5s wall ==
-    # 3.9s total task time across 23 nominal splits). When the source
-    # yields fewer partitions than the session has task slots, round-
-    # robin the (html-free) rows across the slots before the heavy
-    # projections; when scan parallelism is already >= the slot count —
-    # every at-scale input — this branch is a no-op, so no text bytes
-    # are ever shuffled at 100 TB.
-    if not usable.isStreaming:
-        spark = usable.sparkSession
-        slots = spark.sparkContext.defaultParallelism
-        try:
-            n_scan = usable.rdd.getNumPartitions()
-        except Exception:
-            n_scan = slots
-        if n_scan < slots:
-            usable = usable.repartition(slots)
+    # configs cannot help, and the whole normalize/hash/quality chain
+    # (all the per-row regex work of this stage AND the families re-scan)
+    # runs on one core while the rest idle (measured at 50k docs: 3.5s
+    # wall == 3.9s total task time across 23 nominal splits). Spread the
+    # (html-free) rows before the heavy projections.
+    usable = spread_to_slots(usable)
     norm = normalize_text(F.col("text"), cfg.lowercase, cfg.collapse_whitespace)
     if "doc_id" in pages.columns:
         key = F.col("doc_id").cast("long")

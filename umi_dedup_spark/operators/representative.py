@@ -30,29 +30,6 @@ def cluster_table(fams: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def cluster_representatives(clustered_fams: DataFrame) -> DataFrame:
-    """C5: representative family per cluster — max fam_count, tie min fam_tb.
-
-    Rank-1 as a ``min(struct(...))`` aggregation (map-side combine, no
-    single-task sort over a hot cluster): the ordering key (-fam_count,
-    fam_tb, norm_hash) is total (norm_hash unique), so appending the
-    payload fields to the struct cannot change the comparison.
-    """
-    best = F.min(
-        F.struct(
-            (-F.col("fam_count")).alias("nc"),
-            F.col("fam_tb").alias("tb"),
-            F.col("norm_hash").alias("nh"),
-            F.col("fam_count").alias("cnt"),
-        )
-    ).alias("best")
-    return clustered_fams.groupBy("cluster_id").agg(best).select(
-        "cluster_id",
-        F.col("best.nh").alias("rep_norm_hash"),
-        F.col("best.cnt").alias("rep_fam_count"),
-    )
-
-
 _SIGN_BIT = -0x8000000000000000  # xor maps signed int64 order to unsigned
 
 

@@ -78,6 +78,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from umi_dedup_spark.session import spread_to_slots
+
 # conservative guard against float round-up at exact multiples: erring
 # DOWN lengthens the prefix (more candidates, never a missed pair)
 _EPS = 1e-9
@@ -252,24 +254,14 @@ def jaccard_similarity_join(
     else:
         vocab = None
 
-    # Scan-parallelism floor (r6, guide §2.5): a small input written as
-    # one parquet row group is unsplittable, so per-row work above this
-    # point (mask encoding, prefix explode, verification) runs on a
-    # single core. When the source yields fewer partitions than the
-    # session has task slots, spread the (narrow) rows first; at scale
-    # the condition never fires and no shuffle is added. NB: the caller
-    # controls whether TOKENIZATION parallelizes — the tokens expression
-    # lives in the caller's projection, below this exchange; callers
-    # with unsplittable small inputs should repartition the raw rows
+    # Scan-parallelism floor (r6, guide §2.5): spread the (narrow) rows
+    # so the per-row work above this point (mask encoding, prefix
+    # explode, verification) does not run on a single core. NB: the
+    # caller controls whether TOKENIZATION parallelizes — the tokens
+    # expression lives in the caller's projection, below this exchange;
+    # callers with unsplittable small inputs should spread the raw rows
     # before projecting (see __spark_entry__._ngram_jaccard).
-    if not base.isStreaming:
-        slots = base.sparkSession.sparkContext.defaultParallelism
-        try:
-            n_in = base.rdd.getNumPartitions()
-        except Exception:
-            n_in = slots
-        if n_in < slots:
-            base = base.repartition(slots)
+    base = spread_to_slots(base)
 
     if vocab is not None:
         if caches is not None:

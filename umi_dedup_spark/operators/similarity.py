@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from umi_dedup_spark.session import spread_to_slots
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -59,16 +61,8 @@ def brute_force_topk(
     # scan-parallelism floor (r6, guide §2.5): a one-row-group parquet
     # corpus is unsplittable, so the |queries| x |corpus| interpreted-HOF
     # scoring loop ran on 1-2 cores. Spread the probe side across task
-    # slots when (and only when) the scan yields fewer partitions —
-    # a no-op on any at-scale input, and this is the verification
-    # kernel, not the scale path.
-    if not c.isStreaming:
-        slots = c.sparkSession.sparkContext.defaultParallelism
-        try:
-            if c.rdd.getNumPartitions() < slots:
-                c = c.repartition(slots)
-        except Exception:
-            pass
+    # slots.
+    c = spread_to_slots(c)
     c = c.withColumn("_cn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))
     scored = (
         c.join(F.broadcast(q))

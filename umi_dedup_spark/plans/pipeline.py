@@ -76,17 +76,12 @@ def _plan_leaf(df: DataFrame) -> DataFrame:
     partitioning metadata, so a downstream join on the stage's grouping
     key re-exchanges the (narrow) stage output — exchanges of counted
     stage rows are cheap; repeated whole-lineage analysis is not.
-    Falls back to the input unchanged if the internal API is missing."""
-    try:
-        spark = df.sparkSession
-        jdf = df._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        jdf2 = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        return DataFrame(jdf2, spark)
-    except Exception:
-        return df
+    The internal API is that of the pinned pyspark; a missing one raises."""
+    spark = df.sparkSession
+    jdf = df._jdf
+    jrdd = jdf.queryExecution().toRdd()
+    jdf2 = spark._jsparkSession.internalCreateDataFrame(jrdd, jdf.schema(), False)
+    return DataFrame(jdf2, spark)
 
 
 @dataclass

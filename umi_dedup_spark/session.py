@@ -2,6 +2,11 @@
 
 Local mode stands in for the multi-executor cluster; partitioning choices
 below are made for the cluster case (SURVEY.md §4).
+
+Resources are sized from the host the session starts on: one task slot
+per CPU this process may run on, and a driver heap of 60% of physical
+memory in whole GiB. ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM``
+override them for a deployment.
 """
 
 from __future__ import annotations
@@ -9,58 +14,33 @@ from __future__ import annotations
 import os
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 _DRIVER_OPTS_KEY = "spark.driver.extraJavaOptions"
 
 
-def _available_mem_bytes() -> int | None:
-    """MemAvailable from /proc/meminfo (Linux); None if unreadable."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    return int(line.split()[1]) * 1024
-    except OSError:
-        pass
-    return None
+def _host_driver_memory() -> str:
+    """60% of physical memory in whole GiB (at least 1g)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * 0.6 / (1 << 30)))}g"
 
 
-def _parse_size_bytes(s: str) -> int:
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(s[-1].lower())
-    return int(s[:-1]) * mult if mult else int(s)
+def _host_slots() -> int:
+    """Task slots: ``$SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def _driver_java_opts(extra_conf: dict[str, str] | None) -> str:
-    """Compose the pre-touch defaults with caller-supplied JVM opts.
-
-    The Xms/AlwaysPreTouch pair is only injected when the host has
-    comfortably more available memory than the Xms target (1.5x headroom)
-    — on a small host the un-touched lazy heap is strictly safer.
-    SPARK_DRIVER_XMS=0 disables the pre-touch explicitly.
-    """
-    xms = os.environ.get("SPARK_DRIVER_XMS", "8g")
-    parts = []
-    if xms not in ("0", "", "none"):
-        avail = _available_mem_bytes()
-        if avail is None or avail >= int(_parse_size_bytes(xms) * 1.5):
-            parts.append(f"-Xms{xms} -XX:+AlwaysPreTouch")
-    env_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTS", "")
-    if env_opts:
-        parts.append(env_opts)
-    if extra_conf and extra_conf.get(_DRIVER_OPTS_KEY):
-        parts.append(extra_conf[_DRIVER_OPTS_KEY])
-    return " ".join(parts)
-
-
-def _core_count() -> int:
-    """The session's task-slot count: $SPARK_GRAFT_CPUS when numeric,
-    else the host's CPU count (the ``local[*]`` resolution)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if cpus.isdigit():
-        return max(1, int(cpus))
-    return os.cpu_count() or 8
+    """``$SPARK_DRIVER_JAVA_OPTS`` followed by extra_conf's driver opts;
+    extra_conf wins on duplicate flags because the JVM takes the last
+    occurrence."""
+    parts = [os.environ.get("SPARK_DRIVER_JAVA_OPTS", "")]
+    if extra_conf:
+        parts.append(extra_conf.get(_DRIVER_OPTS_KEY, ""))
+    return " ".join(p for p in parts if p)
 
 
 def get_spark(
@@ -71,23 +51,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the dedup pipeline.
 
-    parallelism=None -> ``local[$SPARK_GRAFT_CPUS]`` (default all cores).
+    parallelism=None -> one task slot per host CPU (``$SPARK_GRAFT_CPUS``
+    overrides); shuffle_partitions defaults to one per task slot.
     """
-    # Python UDF workers inherit this process's env: keep large numpy
-    # blocks inside the malloc arena instead of mmap/munmap per
-    # allocation, so pages touched by warm_python_workers stay touched —
-    # this host's fresh-page first-touch intermittently degrades ~100x
-    # (see the AlwaysPreTouch comment below), and per-batch mmap churn
-    # re-pays it inside every Arrow UDF stage.
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = f"local[{parallelism if parallelism is not None else cpus}]"
+    slots = parallelism if parallelism is not None else _host_slots()
     if shuffle_partitions is None:
-        shuffle_partitions = 32 if parallelism is None else max(parallelism, 8)
+        shuffle_partitions = slots
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{slots}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -96,23 +68,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        # Pre-touch the initial heap (-Xms + AlwaysPreTouch): this host's
-        # fresh-page first-touch degrades ~75-100x intermittently
-        # (BENCH/host_probe.py; a sustained-copy probe measured 0.4-5 GB/s
-        # for the first ~35s of fresh allocations vs 65 GB/s steady). A
-        # growing heap re-pays that tax inside text-heavy stages — at 500k
-        # synth docs it inflated the pipeline 425s -> 90s when fixed.
-        # Xms is deliberately smaller than Xmx: pre-touching all 48g cost
-        # 277s in one degraded window; 8g covers the working set of the
-        # bench sizes and keeps worst-case session startup bounded. On a
-        # real cluster this is spark.executor.extraJavaOptions. The
-        # pre-touch default is GATED on free memory (hosts with less
-        # available than the Xms target would stall or OOM at JVM start)
-        # and composed with — not clobbered by — any caller opts (env var
-        # and extra_conf both merge; extra_conf wins on duplicate flags
-        # because the JVM takes the last occurrence).
-        .config("spark.driver.extraJavaOptions", _driver_java_opts(extra_conf))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _host_driver_memory(),
+        )
+        .config(_DRIVER_OPTS_KEY, _driver_java_opts(extra_conf))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Scan-parallelism floor (scale-adaptive, r6): a small parquet
         # input (the 6MB documents table) packs into 1-2 splits at the
@@ -125,14 +85,17 @@ def get_spark(
         # min(maxPartitionBytes, max(openCostInBytes, total/minPartitionNum))).
         # At cluster scale total/minPartitionNum >> 128MB, so large scans
         # keep the exact same 128MB splits — this only widens small ones.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            str(parallelism if parallelism is not None else _core_count()),
-        )
+        .config("spark.sql.files.minPartitionNum", str(slots))
         .config("spark.sql.files.openCostInBytes", "262144")
         # Arrow batch cap bounds per-python-worker peak memory in the
         # fingerprint kernels (vectorized-across-rows numpy temporaries)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        # Sort/aggregate memory pages below half a G1 region. Spark's
+        # default page (execution memory / slots / 16, up to 64 MB) is a
+        # humongous object at a few-GiB heap on few slots: each task's
+        # dropped pages land in fresh heap regions, so the driver's
+        # resident memory swung by ~1 GB from one run to the next.
+        .config("spark.buffer.pageSize", "2m")
         # /tmp is janitored in some sandboxes mid-run (observed: blockmgr
         # dir vanishing under a long job); keep shuffle/cache scratch in a
         # repo-local dir instead
@@ -150,17 +113,27 @@ def get_spark(
     return spark
 
 
+def spread_to_slots(df: DataFrame) -> DataFrame:
+    """Round-robin a batch input across the session's task slots when it
+    has fewer partitions than slots (a small input written as one parquet
+    row group is unsplittable, so per-row work above it would run on one
+    core); otherwise, and for streaming inputs, return it unchanged. At
+    scale the condition never fires and no shuffle is added."""
+    if df.isStreaming:
+        return df
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < slots:
+        return df.repartition(slots)
+    return df
+
+
 def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     """Pre-fork and warm one Python UDF worker per task slot (untimed
     setup, the executor-warmup step any cluster deployment performs).
 
-    A cold worker pays fork + numpy/pandas/pyarrow import + first-touch
-    arena allocation *inside the first timed Arrow-UDF stage*; on this VM
-    first-touch is intermittently pathological and 32 concurrent cold
-    workers were measured adding ~15s to the first fingerprint stage
-    (19.8s cold vs 4.9s warm at local[32]). Workers are reused for the
-    session, so one throwaway job per slot retires the cost."""
-    import numpy as np
+    A cold worker pays fork + numpy/pandas/pyarrow import *inside the
+    first timed Arrow-UDF stage*. Workers are reused for the session, so
+    one throwaway job per slot retires the cost."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -170,11 +143,6 @@ def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     def _touch(s: pd.Series) -> pd.Series:
         from umi_dedup_spark.functions import hashing  # noqa: F401  (import cost)
 
-        # ~128MB first-touch per worker — sized to the fingerprint
-        # kernel's peak batch temporaries; with MALLOC_MMAP_THRESHOLD_
-        # raised (get_spark) the freed block stays in the arena, so the
-        # touched pages are reused by every later Arrow batch
-        a = np.ones(16_000_000, dtype=np.int64)
-        return pd.Series(np.full(len(s), int(a[:100].sum())))
+        return s
 
     spark.range(0, n, 1, n).select(_touch(F.col("id"))).count()
